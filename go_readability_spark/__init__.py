@@ -10,7 +10,7 @@ Layout:
 - ``operators/``: extraction UDF (mapInArrow), render sinks, dedup,
   similarity search, text analysis, multimodal plumbing, relational ops.
 - ``functions/``: paired Spark-Column + DuckDB-SQL formula builders.
-- ``plans/``: session, skew handling, checkpoint/resume, bucketing.
+- ``plans/``: session, skew handling, checkpoint/resume.
 - ``streaming/``: Structured Streaming wrappers.
 - ``queries``: the (query, oracle) registry behind __spark_entry__.
 

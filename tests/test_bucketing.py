@@ -1,4 +1,4 @@
-"""Bucketed co-located joins + LSH embedding near-dup tests."""
+"""LSH embedding near-dup and IVF/LSH stored-index tests."""
 
 from __future__ import annotations
 
@@ -15,45 +15,6 @@ def _formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-
-
-class TestBucketedJoin:
-    def test_cobucketed_join_has_no_shuffle(self, spark):
-        from go_readability_spark.plans.bucketing import (
-            read_bucketed_join,
-            write_bucketed,
-        )
-
-        docs = spark.read.parquet(f"{SF}/documents.parquet")
-        left = docs.select("doc_id", "text")
-        right = docs.select("doc_id", "lang", "n_chars")
-        write_bucketed(left, "bkt_left", "doc_id", 8)
-        write_bucketed(right, "bkt_right", "doc_id", 8)
-
-        # at test scale Catalyst would (correctly) broadcast the tiny
-        # side, which bypasses bucketing — disable it to expose the plan
-        # that a 100 TB fact-to-fact join would take
-        threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = read_bucketed_join(spark, "bkt_left", "bkt_right")
-            assert joined.count() == docs.count()
-            plan = _formatted(joined)
-            assert "SortMergeJoin" in plan
-            assert "Bucketed: true" in plan
-            assert "Exchange" not in plan  # the whole point: no shuffle
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-
-    def test_unbucketed_join_does_shuffle(self, spark):
-        """Control: the same join on plain parquet requires exchanges
-        (or a broadcast)."""
-        docs = spark.read.parquet(f"{SF}/documents.parquet")
-        joined = docs.select("doc_id", "text").join(
-            docs.select("doc_id", "lang").hint("merge"), "doc_id"
-        )
-        plan = _formatted(joined)
-        assert "Exchange" in plan
 
 
 class TestEmbeddingLsh:

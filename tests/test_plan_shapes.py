@@ -103,6 +103,28 @@ class TestNativeStages:
         )
         assert "Python" not in plan
 
+    @pytest.mark.parametrize("op", ["extract_documents", "extract_and_render"])
+    def test_extraction_is_one_map_in_arrow(self, spark, op):
+        """One extraction path: the executed plan holds exactly one
+        MapInArrow UDF node and no MapInPandas (the input is native, so
+        any Python node would be the operator's)."""
+        from go_readability_spark.operators.extract import extract_documents
+        from go_readability_spark.operators.render import extract_and_render
+        from go_readability_spark.sources.tables import documents_as_spans_df
+
+        fn = {
+            "extract_documents": extract_documents,
+            "extract_and_render": extract_and_render,
+        }[op]
+        df = fn(documents_as_spans_df(spark, SF).limit(8), num_partitions=2)
+        assert len(df.collect()) == 8
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()  # the final plan, without the initial one
+        plan = plan.toString()
+        assert plan.count("MapInArrow") == 1, plan
+        assert "MapInPandas" not in plan, plan
+
     def test_dedup_exact_partial_aggregation(self, spark):
         from go_readability_spark.operators.dedup import dedup_exact
 

@@ -111,48 +111,65 @@ class TestCli:
 
 @pytest.mark.usefixtures("spark")
 class TestRenderSpark:
-    def test_render_documents(self, spark):
-        from go_readability_spark.operators.render import render_documents
-        from go_readability_spark.sources.tables import corpus_df
-
-        out = render_documents(corpus_df(spark, 10), num_partitions=2)
-        rows = {r["doc_id"]: r for r in out.collect()}
-        assert len(rows) == 10
-        assert all(r["error"] is None for r in rows.values())
-        # spot-check one doc against the pure pipeline
-        doc_id = "syn-article-000000"
-        art = extract(spans_to_html(generate_doc(doc_id)))
-        got = rows[doc_id]
-        assert json.loads(got["metadata_json"])["nodeCount"] == art.node_count
-        assert got["markdown"] == render_article(art)["markdown"]
-
     def test_extract_and_render_single_pass_parity(self, spark):
-        """Combined op == extract_documents ⨝ render_documents, one UDF."""
+        """Combined op == extract_documents ⨝ render_article of the pure
+        pipeline, in one UDF."""
         from go_readability_spark.operators.extract import extract_documents
-        from go_readability_spark.operators.render import (
-            extract_and_render,
-            render_documents,
+        from go_readability_spark.operators.render import extract_and_render
+        from go_readability_spark.readability.extract import ReadabilityOptions
+        from go_readability_spark.readability.instrumented import (
+            extract_with_metrics,
         )
         from go_readability_spark.sources.tables import corpus_df
 
         docs = corpus_df(spark, 12)
         combined = {r["doc_id"]: r for r in extract_and_render(docs, num_partitions=2).collect()}
         extracted = {r["doc_id"]: r for r in extract_documents(docs, num_partitions=2).collect()}
-        rendered = {r["doc_id"]: r for r in render_documents(docs, num_partitions=2).collect()}
-        assert set(combined) == set(extracted) == set(rendered)
+        assert set(combined) == set(extracted) and len(combined) == 12
         for doc_id, row in combined.items():
-            e, r = extracted[doc_id], rendered[doc_id]
+            e = extracted[doc_id]
             assert row["spans_out"] == e["spans_out"]
             assert row["meta"] == e["meta"]
-            assert row["error"] == e["error"]
-            for col in ("html", "markdown", "text", "metadata_json"):
-                assert row[col] == r[col], (doc_id, col)
+            assert row["error"] == e["error"] is None
+            art, _ = extract_with_metrics(
+                spans_to_html(generate_doc(doc_id)),
+                ReadabilityOptions(forced_page_type=""),
+            )
+            for col, want in render_article(art).items():
+                assert row[col] == want, (doc_id, col)
 
     def test_extract_and_render_error_rows(self, spark):
+        """Malformed and over-cap docs become the same error rows as
+        extraction's, with empty renderings. (The null-struct trap cannot
+        be built from Spark rows; test_arrow_path_null_struct_with_nonnull_
+        children feeds it to the render batch function directly.)"""
+        from go_readability_spark.operators.extract import extract_documents
         from go_readability_spark.operators.render import extract_and_render
+        from go_readability_spark.plans.skew import MAX_DOC_BYTES
         from go_readability_spark.schemas import DOCUMENTS_SCHEMA
 
-        bad = spark.createDataFrame([("bad-doc", None)], DOCUMENTS_SCHEMA)
-        row = extract_and_render(bad, num_partitions=1).collect()[0]
-        assert row["error"] == "null spans"
-        assert row["html"] == "" and row["markdown"] == ""
+        from test_spark_pipeline import TestMalformedSpans
+
+        cases = TestMalformedSpans.CASES
+        df = spark.createDataFrame(cases, DOCUMENTS_SCHEMA)
+        for cap in (MAX_DOC_BYTES, 10):
+            rendered = {
+                r["doc_id"]: r
+                for r in extract_and_render(df, num_partitions=1, max_doc_bytes=cap).collect()
+            }
+            extracted = {
+                r["doc_id"]: r
+                for r in extract_documents(df, num_partitions=1, max_doc_bytes=cap).collect()
+            }
+            assert set(rendered) == {c[0] for c in cases}
+            for doc_id, row in rendered.items():
+                e = extracted[doc_id]
+                assert row["error"] == e["error"], (cap, doc_id)
+                assert row["spans_out"] == e["spans_out"]
+                assert row["meta"] == e["meta"]
+                if row["error"] is not None:
+                    assert row["spans_out"] == []
+                    for col in ("html", "markdown", "text", "metadata_json"):
+                        assert row[col] == "", (cap, doc_id, col)
+            assert rendered["null-array"]["error"] == "null spans"
+            assert rendered["null-span-entry"]["error"] == "null spans"

@@ -1,9 +1,10 @@
-"""Spark-level tests: mapInPandas extraction ≡ pure function per doc,
+"""Spark-level tests: mapInArrow extraction ≡ pure function per doc,
 skew pre-pass correctness, checkpoint/resume idempotency.
 
-SURVEY.md §5: "one Spark-level test that mapInPandas over the fixture table
-equals the pure function per doc" — plus plan-shape assertions that the
-scale-critical properties hold (native pre-pass, broadcast anti-join).
+SURVEY.md §5: "one Spark-level test that the extraction UDF over the
+fixture table equals the pure function per doc" — plus plan-shape
+assertions that the scale-critical properties hold (native pre-pass,
+broadcast anti-join).
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from go_readability_spark.plans.checkpoint import (  # noqa: E402
     with_part,
 )
 from go_readability_spark.plans.skew import (  # noqa: E402
+    MAX_DOC_BYTES,
     skew_partitioned,
     with_doc_bytes,
     with_size_bucket,
@@ -114,9 +116,9 @@ class TestErrorRows:
     def test_arrow_path_null_struct_with_nonnull_children(self):
         """A null span STRUCT whose child slots hold non-null garbage
         (possible in Arrow batches from non-Spark writers) must become a
-        'null spans' error row, matching the pandas/JVM paths — struct-
-        level validity is separate from child validity and field()
-        ignores it."""
+        'null spans' error row, with and without renderings, matching the
+        in-process reference — struct-level validity is separate from
+        child validity and field() ignores it."""
         import pyarrow as pa
 
         from go_readability_spark.operators.extract import _make_arrow_fn
@@ -146,9 +148,12 @@ class TestErrorRows:
             [pa.array(["doc-x"]), spans, pa.array([10], type=pa.int64())],
             names=["doc_id", "spans", "doc_bytes"],
         )
-        fn = _make_arrow_fn(None, 1 << 30)
-        out = list(fn(iter([batch])))[0]
-        assert out.column("error").to_pylist() == ["null spans"]
+        for render in (False, True):
+            fn = _make_arrow_fn(None, 1 << 30, render)
+            out = list(fn(iter([batch])))[0]
+            assert out.column("error").to_pylist() == ["null spans"]
+            assert out.column("spans_out").to_pylist() == [[]]
+        assert out.column("markdown").to_pylist() == [""]
 
 
 class TestSkewPlan:
@@ -266,9 +271,8 @@ if __name__ == "__main__":
 
 
 class TestNativeReassembly:
-    """JVM-side span reassembly option: value-identical to the Python
-    codec (kept off by default — measured slower; see extract_documents
-    docstring)."""
+    """JVM-side span reassembly (streaming dedup's fingerprint input):
+    value-identical to the Python codec."""
 
     def test_native_equals_codec(self, spark):
         import hashlib
@@ -289,34 +293,26 @@ class TestNativeReassembly:
                 hashlib.md5(expected.encode()).hexdigest() == r["h"]
             ), r["doc_id"]
 
-    def test_native_extraction_parity(self, spark):
-        docs = corpus_df(spark, 10)
-        def key(r):
-            return (
-                r["doc_id"],
-                tuple(tuple(s) for s in r["spans_out"]),
-                tuple(r["meta"]),
-                tuple(r["metrics"]),
-                r["doc_bytes"],
-                r["error"],
-            )
 
-        a = sorted(
-            key(r)
-            for r in extract_documents(
-                docs, num_partitions=2, native_reassembly=True
-            ).collect()
-        )
-        b = sorted(
-            key(r)
-            for r in extract_documents(docs, num_partitions=2).collect()
-        )
-        assert a == b
+def _ref_doc_bytes(spans) -> int:
+    """doc_bytes as the native pre-pass computes it."""
+    return sum(
+        len((s["text"] or "").encode("utf-8"))
+        + len((s["media_ref"] or "").encode("utf-8"))
+        for s in spans or []
+        if s is not None
+    )
+
+
+def _comparable(row: dict) -> dict:
+    """An output row without its wall-clock column."""
+    return {k: v for k, v in row.items() if k != "elapsed_ms"}
 
 
 class TestMalformedSpans:
-    """All three extraction paths emit identical error rows for malformed
-    inputs — and the split-union partitioner must not drop rows whose
+    """Spark and the in-process reference (extract_batch_rows) emit
+    identical rows for malformed inputs, the size cap winning over the
+    malformed check — and the partitioner must not drop rows whose
     doc_bytes would be NULL (regression: null spans arrays vanished)."""
 
     CASES = [
@@ -327,37 +323,52 @@ class TestMalformedSpans:
         ("null-offset", [{"kind": "text", "text": "X", "media_ref": "",
                           "offset": None}]),
         ("null-array", None),
+        # malformed AND over a 10-byte cap (doc_bytes 15): the cap wins,
+        # so the doc is never reassembled
+        ("malformed-over-cap", [None, {"kind": "text",
+                                       "text": "<p>hi there</p>",
+                                       "media_ref": "", "offset": 1}]),
     ]
 
     def test_identical_error_rows_all_paths(self, spark):
         from go_readability_spark.schemas import DOCUMENTS_SCHEMA
 
         df = spark.createDataFrame(self.CASES, DOCUMENTS_SCHEMA)
-        results = {}
-        for name, kw in [
-            ("native", dict(native_reassembly=True)),
-            ("decode", {}),
-            ("pandas", dict(use_arrow=False)),
-        ]:
-            out = {
-                r["doc_id"]: r["error"]
-                for r in extract_documents(df, num_partitions=2, **kw).collect()
+        ids = [c[0] for c in self.CASES]
+        spans = [c[1] for c in self.CASES]
+        sizes = [_ref_doc_bytes(sp) for sp in spans]
+        expected_errors = {
+            MAX_DOC_BYTES: {
+                "ok": None,
+                "null-span-entry": "null spans",
+                "null-offset": "null spans",
+                "null-array": "null spans",
+                "malformed-over-cap": "null spans",
+            },
+            10: {
+                "ok": f"doc_bytes {sizes[0]} > cap 10",
+                "null-span-entry": "null spans",
+                "null-offset": "null spans",
+                "null-array": "null spans",
+                "malformed-over-cap": "doc_bytes 15 > cap 10",
+            },
+        }
+        for cap, errors in expected_errors.items():
+            got = {
+                r["doc_id"]: _comparable(r.asDict(recursive=True))
+                for r in extract_documents(
+                    df, num_partitions=2, max_doc_bytes=cap
+                ).collect()
             }
-            assert len(out) == len(self.CASES), f"{name}: rows dropped"
-            results[name] = out
-        assert results["native"] == results["decode"] == results["pandas"]
-        assert results["decode"]["ok"] is None
-        for bad in ("null-span-entry", "null-offset", "null-array"):
-            assert results["decode"][bad] == "null spans"
-
-    def test_cap_message_wins_on_native_path(self, spark):
-        from go_readability_spark.schemas import DOCUMENTS_SCHEMA
-
-        df = spark.createDataFrame(self.CASES[:1], DOCUMENTS_SCHEMA)
-        row = extract_documents(
-            df, num_partitions=1, native_reassembly=True, max_doc_bytes=10
-        ).collect()[0]
-        assert row["error"].startswith("doc_bytes")
+            assert len(got) == len(self.CASES), f"cap {cap}: rows dropped"
+            ref = {
+                r["doc_id"]: _comparable(r)
+                for r in extract_batch_rows(
+                    ids, spans, sizes, max_doc_bytes=cap
+                )
+            }
+            assert got == ref, f"cap {cap}"
+            assert {k: r["error"] for k, r in got.items()} == errors
 
 
 class TestCheckpointStagingEdgeCases:
