@@ -12,7 +12,6 @@ from .hashing import (  # noqa: F401
     MINHASH_B,
     md5_prefix_hash,
     md5_prefix_hash_sql,
-    minhash_signature,
     minhash_signature_sql,
 )
 from .text import (  # noqa: F401

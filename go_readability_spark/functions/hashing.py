@@ -22,7 +22,6 @@ __all__ = [
     "MINHASH_B",
     "md5_prefix_hash",
     "md5_prefix_hash_sql",
-    "minhash_signature",
     "minhash_signature_sql",
     "band_hash",
     "band_hash_sql",
@@ -56,13 +55,6 @@ def md5_prefix_hash_sql(expr: str) -> str:
     """DuckDB fragment computing the identical value."""
     return (
         f"(cast(concat('0x', substr(md5({expr}), 1, 15)) as bigint) % {HASH_P})"
-    )
-
-
-def minhash_signature(shingles_col: Column, k: int) -> Column:
-    """array<long> MinHash signature over an array-of-strings column."""
-    return minhash_signature_from_hashes(
-        F.transform(shingles_col, md5_prefix_hash), k
     )
 
 

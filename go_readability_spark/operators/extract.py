@@ -27,7 +27,11 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..readability.extract import ReadabilityOptions
+from ..readability.extract import (
+    ExtractionMetrics,
+    ReadabilityOptions,
+    extract_with_metrics,
+)
 from ..schemas import EXTRACTED_AND_RENDERED_SCHEMA, EXTRACTED_SCHEMA
 from ..plans.skew import MAX_DOC_BYTES, skew_partitioned, with_doc_bytes
 
@@ -60,7 +64,6 @@ def _extract_doc(
     are malformed (null array, null span or null offset). The size cap is
     checked first, so over-cap docs are never reassembled. Error rows carry
     empty output (and empty renderings) and the measured ``elapsed_ms``."""
-    from ..readability.instrumented import extract_with_metrics
     from ..spans import element_to_spans
 
     t0 = time.perf_counter()
@@ -68,14 +71,7 @@ def _extract_doc(
         "doc_id": doc_id,
         "spans_out": [],
         "meta": {"title": "", "byline": "", "page_type": "error", "node_count": 0},
-        "metrics": {
-            "candidate_count": 0,
-            "pruned_nodes": 0,
-            "prune_ratio": 0.0,
-            "top_score": 0.0,
-            "link_density": 0.0,
-            "is_probably_content": False,
-        },
+        "metrics": vars(ExtractionMetrics()),
         "doc_bytes": doc_bytes,
         "error": None,
     }
@@ -98,14 +94,7 @@ def _extract_doc(
                         "page_type": article.page_type,
                         "node_count": article.node_count,
                     },
-                    "metrics": {
-                        "candidate_count": m.candidate_count,
-                        "pruned_nodes": m.pruned_nodes,
-                        "prune_ratio": m.prune_ratio,
-                        "top_score": m.top_score,
-                        "link_density": m.link_density,
-                        "is_probably_content": m.is_probably_content,
-                    },
+                    "metrics": vars(m),
                 }
                 if render:
                     from .render import render_article
@@ -226,11 +215,11 @@ def _extract(
     options: Optional[ReadabilityOptions],
     num_partitions: Optional[int],
     max_doc_bytes: int,
-    repartition: bool,
     render: bool,
 ) -> DataFrame:
     df = with_doc_bytes(df)
-    if repartition:
+    # a streaming micro-batch is already bounded and is not repartitioned
+    if not df.isStreaming:
         num = num_partitions or df.sparkSession.sparkContext.defaultParallelism
         df = skew_partitioned(df, num)
     return df.select("doc_id", "spans", "doc_bytes").mapInArrow(
@@ -244,17 +233,14 @@ def extract_documents(
     options: Optional[ReadabilityOptions] = None,
     num_partitions: Optional[int] = None,
     max_doc_bytes: int = MAX_DOC_BYTES,
-    repartition: bool = True,
 ) -> DataFrame:
     """documents(doc_id, spans) → extracted(doc_id, spans_out, meta, metrics,
     doc_bytes, error, elapsed_ms).
 
-    ``repartition=False`` keeps the input partitioning (useful when the
-    caller already co-partitioned, e.g. the checkpointed per-partition loop
-    or a streaming micro-batch)."""
-    return _extract(
-        df, options, num_partitions, max_doc_bytes, repartition, render=False
-    )
+    A batch DataFrame is skew-repartitioned into ``num_partitions``
+    (default: the cluster's parallelism) first; a streaming DataFrame
+    keeps its micro-batch partitioning."""
+    return _extract(df, options, num_partitions, max_doc_bytes, render=False)
 
 
 def metrics_rollup(extracted: DataFrame, *group_cols: str) -> DataFrame:

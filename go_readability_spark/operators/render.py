@@ -59,6 +59,4 @@ def extract_and_render(
     so the readability core runs once per document. Output =
     EXTRACTED_SCHEMA columns + (html, markdown, text, metadata_json);
     error rows carry empty renderings."""
-    return _extract(
-        df, options, num_partitions, max_doc_bytes, repartition=True, render=True
-    )
+    return _extract(df, options, num_partitions, max_doc_bytes, render=True)

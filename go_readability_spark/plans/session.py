@@ -16,26 +16,30 @@ from pyspark.sql import SparkSession
 __all__ = ["get_spark", "giant_doc_scan", "scoped_sql_conf"]
 
 
+# rows per Arrow batch: a batch of average (~10 KiB) docs is a few MiB;
+# skew_partitioned()'s full-width salt spreads giant docs so a batch rarely
+# aggregates many multi-MiB documents (SURVEY.md §4.2)
+ARROW_MAX_RECORDS = 256
+# parquet columnar read batch for giant-document span tables (giant_doc_scan)
+GIANT_DOC_BATCH_ROWS = 256
+
+
 def get_spark(
     app_name: str = "go-readability-spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
-    arrow_max_records: int = 256,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    - ``arrow_max_records=256``: an Arrow batch of average (~10 KiB) docs is
-      a few MiB; skew_partitioned()'s full-width salt spreads giant docs
-      so a batch rarely aggregates many multi-MiB documents (SURVEY.md §4.2).
+    - shuffle partitions are ``max(cores, 8)``; Arrow batches hold
+      ``ARROW_MAX_RECORDS`` rows.
     - AQE coalesces the small shuffles of metrics rollups; the extraction
       stage itself is map-side only (no shuffle after the repartition).
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.default.parallelism", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -43,7 +47,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(arrow_max_records),
+            str(ARROW_MAX_RECORDS),
         )
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -87,7 +91,7 @@ def scoped_sql_conf(spark: SparkSession, confs: dict):
                 spark.conf.set(key, old)
 
 
-def giant_doc_scan(spark: SparkSession, batch_rows: int = 256):
+def giant_doc_scan(spark: SparkSession):
     """Scope for parquet scans over giant-document span tables.
 
     At the default 4,096 rows per columnar read batch, a row group dense
@@ -104,5 +108,6 @@ def giant_doc_scan(spark: SparkSession, batch_rows: int = 256):
     whole workload is giant-doc scans — sets 256 session-wide instead.
     """
     return scoped_sql_conf(
-        spark, {"spark.sql.parquet.columnarReaderBatchSize": str(batch_rows)}
+        spark,
+        {"spark.sql.parquet.columnarReaderBatchSize": str(GIANT_DOC_BATCH_ROWS)},
     )

@@ -5,7 +5,9 @@ The north rule requires explicit handling of giant-document skew. Strategy
 
 1. ``with_doc_bytes`` — compute per-doc byte size with **native Catalyst
    expressions only** (``aggregate(transform(...))``), no Python, so the
-   pre-pass is whole-stage-codegen'd and costs one scan column.
+   pre-pass costs one scan column. The higher-order functions are
+   ``CodegenFallback`` in Spark 4.1, so they run interpreted inside the
+   codegen stage.
 2. ``with_size_bucket`` — small / medium / giant buckets.
 3. ``skew_partitioned`` — every doc is hash-spread by an explicit
    full-width salt (``xxhash64(doc_id)``), so giants land ~n_giants/N per
@@ -53,7 +55,8 @@ _DOC_BYTES_EXPR = (
 
 
 def with_doc_bytes(df: DataFrame, spans_col: str = "spans") -> DataFrame:
-    """Add ``doc_bytes`` (sum of UTF-8 span text bytes) — pure Catalyst."""
+    """Add ``doc_bytes`` (UTF-8 bytes of every span's text and media_ref)
+    — pure Catalyst."""
     if "doc_bytes" in df.columns:
         return df
     return df.withColumn(

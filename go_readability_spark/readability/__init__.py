@@ -38,12 +38,14 @@ from .dom import (  # noqa: F401
     is_probably_visible,
 )
 from .extract import (  # noqa: F401
+    ExtractionMetrics,
     ReadabilityArticle,
     ReadabilityOptions,
     add_significant_elements_by_class_or_id,
     create_extractor,
     extract,
     extract_content,
+    extract_with_metrics,
     find_structural_elements,
 )
 from .fmt import (  # noqa: F401
@@ -53,10 +55,6 @@ from .fmt import (  # noqa: F401
     format_document,
     stringify,
     to_html,
-)
-from .instrumented import (  # noqa: F401
-    ExtractionMetrics,
-    extract_with_metrics,
 )
 from .markdown import escape_markdown, to_markdown  # noqa: F401
 from .metadata import (  # noqa: F401

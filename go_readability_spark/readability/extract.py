@@ -3,11 +3,17 @@
 Ports /root/reference/core.go:25-326 (Extract, ExtractContent,
 FindStructuralElements, AddSignificantElementsByClassOrId) and the
 options/article structs (options.go:21-49, article.go:12-26).
+
+``extract_with_metrics`` runs the same lifecycle and also returns the
+per-document ``ExtractionMetrics`` (FIXTURES.md §2 ``metrics`` struct)
+that feed the Spark metrics rollup (SURVEY.md §4.2). The reference has no
+equivalent; the numbers come from its intermediate state (scored
+candidate list, preprocess deletions).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional
 
 from .classify import (
@@ -17,6 +23,8 @@ from .classify import (
     is_significant_node,
 )
 from .dom import (
+    begin_inner_text_cache,
+    end_inner_text_cache,
     get_elements_by_tag_name,
     get_elements_in_tag_order,
     get_inner_text,
@@ -28,14 +36,16 @@ from .metadata import get_article_byline, get_article_title
 from .parser import parse_html
 from .preprocess import preprocess_document
 from .regexps import DEFAULT_CHAR_THRESHOLD, DEFAULT_N_TOP_CANDIDATES, byte_len
-from .scoring import find_main_candidates
+from .scoring import find_main_candidates, is_probably_content
 from .vdom import VDocument, VElement
 
 __all__ = [
     "ReadabilityOptions",
     "ReadabilityArticle",
+    "ExtractionMetrics",
     "extract",
     "extract_content",
+    "extract_with_metrics",
     "find_structural_elements",
     "add_significant_elements_by_class_or_id",
     "create_extractor",
@@ -107,6 +117,21 @@ class ReadabilityArticle:
         )
 
 
+@dataclass
+class ExtractionMetrics:
+    """Per-document metrics: the one definition of the ``metrics`` struct.
+
+    Its Spark type, ``schemas.METRICS_TYPE``, has these fields in this
+    order (tested)."""
+
+    candidate_count: int = 0
+    pruned_nodes: int = 0
+    prune_ratio: float = 0.0
+    top_score: float = 0.0
+    link_density: float = 0.0
+    is_probably_content: bool = False
+
+
 def extract(
     html: str, options: Optional[ReadabilityOptions] = None
 ) -> ReadabilityArticle:
@@ -115,25 +140,38 @@ def extract(
     Defaults are applied to a COPY: Go passes Options by value
     (core.go:25), so its in-function defaulting never leaks to the
     caller — mutating the caller's instance here would silently force
-    page_type='article' on their later extract_content calls."""
+    page_type='article' on their later extract_content calls. The
+    thresholds are defaulted by the shared core."""
     options = options or ReadabilityOptions()
     doc = parse_html(html, "")
     preprocess_document(doc)
-    effective = ReadabilityOptions(
-        char_threshold=(
-            options.char_threshold
-            if options.char_threshold > 0
-            else DEFAULT_CHAR_THRESHOLD
-        ),
-        nb_top_candidates=(
-            options.nb_top_candidates
-            if options.nb_top_candidates > 0
-            else DEFAULT_N_TOP_CANDIDATES
-        ),
-        generate_aria_tree=options.generate_aria_tree,
-        forced_page_type=options.forced_page_type or PAGE_TYPE_ARTICLE,
+    return extract_content(
+        doc,
+        replace(options, forced_page_type=options.forced_page_type or PAGE_TYPE_ARTICLE),
     )
-    return extract_content(doc, effective)
+
+
+def extract_with_metrics(
+    html: str, options: Optional[ReadabilityOptions] = None
+) -> tuple[ReadabilityArticle, ExtractionMetrics]:
+    """``extract`` (parse and preprocess included) plus the document's
+    ``ExtractionMetrics``.
+
+    With ``options=None`` this mirrors ``extract``'s defaulting quirk
+    (ForcedPageType→"article", core.go:46-47). An explicit
+    ``ReadabilityOptions(forced_page_type="")`` reaches the classifier —
+    the pipeline uses that so index pages get page_type="other".
+    """
+    if options is None:
+        options = ReadabilityOptions(forced_page_type=PAGE_TYPE_ARTICLE)
+    doc = parse_html(html, "")
+    nodes_before = count_nodes(doc.document_element)
+    preprocess_document(doc)
+    pruned = max(0, nodes_before - count_nodes(doc.document_element))
+    article, metrics = _extract_content_core(doc, options)
+    metrics.pruned_nodes = pruned
+    metrics.prune_ratio = pruned / nodes_before if nodes_before > 0 else 0.0
+    return article, metrics
 
 
 def extract_content(
@@ -147,19 +185,16 @@ def extract_content(
     calling this function directly with forced_page_type="".
     """
     options = options or ReadabilityOptions(forced_page_type="")
-    return _extract_content_core(doc, options)
+    return _extract_content_core(doc, options)[0]
 
 
 def _extract_content_core(
-    doc: VDocument,
-    options: ReadabilityOptions,
-    metrics_out: Optional[dict] = None,
-) -> ReadabilityArticle:
-    """Shared lifecycle for extract_content and extract_with_metrics.
+    doc: VDocument, options: ReadabilityOptions
+) -> tuple[ReadabilityArticle, ExtractionMetrics]:
+    """Shared lifecycle of extract_content and extract_with_metrics.
 
-    ``metrics_out`` (a plain dict, to avoid a circular import with
-    instrumented.py) receives candidate_count / top_score / link_density /
-    is_probably_content when provided."""
+    Fills the candidate metrics; ``pruned_nodes`` and ``prune_ratio`` are
+    left to the caller, which saw the tree before preprocessing."""
     char_threshold = (
         options.char_threshold
         if options.char_threshold > 0
@@ -173,32 +208,21 @@ def _extract_content_core(
 
     # the tree is immutable during scoring/classify/metadata (only
     # ContentScore mutates) — memoize get_inner_text for this read phase
-    from .dom import begin_inner_text_cache, end_inner_text_cache
-
+    metrics = ExtractionMetrics()
     begin_inner_text_cache()
     try:
         candidates = find_main_candidates(doc, nb_top_candidates)
-        top_candidate: Optional[VElement] = None
+        metrics.candidate_count = len(candidates)
         article_content: Optional[VElement] = None
-        if metrics_out is not None:
-            metrics_out["candidate_count"] = len(candidates)
 
         if candidates:
             top_candidate = candidates[0]
             text_length = byte_len(get_inner_text(top_candidate, False))
             link_density = get_link_density(top_candidate)
-            if metrics_out is not None:
-                from .scoring import is_probably_content
-
-                metrics_out["top_score"] = (
-                    top_candidate.readability
-                    if top_candidate.readability is not None
-                    else 0.0
-                )
-                metrics_out["link_density"] = link_density
-                metrics_out["is_probably_content"] = is_probably_content(
-                    top_candidate
-                )
+            if top_candidate.readability is not None:
+                metrics.top_score = top_candidate.readability
+            metrics.link_density = link_density
+            metrics.is_probably_content = is_probably_content(top_candidate)
             # accept gate (core.go:83-94)
             if text_length >= char_threshold and link_density <= 0.5:
                 article_content = top_candidate
@@ -235,7 +259,7 @@ def _extract_content_core(
         footer=footer,
         other_significant_nodes=other_significant_nodes,
         aria_tree=None,
-    )
+    ), metrics
 
 
 def find_structural_elements(
@@ -339,6 +363,6 @@ def create_extractor(options: ReadabilityOptions):
     """core.go:582-586."""
 
     def _extract(html: str) -> ReadabilityArticle:
-        return extract(html, ReadabilityOptions(**options.__dict__))
+        return extract(html, replace(options))
 
     return _extract

@@ -47,6 +47,7 @@ def main(argv=None) -> int:
 
     from go_readability_spark.operators.extract import metrics_rollup
     from go_readability_spark.plans.checkpoint import run_checkpointed
+    from go_readability_spark.plans.session import ARROW_MAX_RECORDS, GIANT_DOC_BATCH_ROWS
     from go_readability_spark.readability.extract import ReadabilityOptions
 
     # In production the session comes from spark-submit's conf; these
@@ -54,11 +55,11 @@ def main(argv=None) -> int:
     # which must stay small for document-sized rows (plans/session.py).
     builder = (
         SparkSession.builder.appName("gr-spark-extract")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
         # bound the vectorized parquet read batch the same way — the
         # 4096-row default over-reserves on giant-document tables
         # (plans/session.py has the full story)
-        .config("spark.sql.parquet.columnarReaderBatchSize", "256")
+        .config("spark.sql.parquet.columnarReaderBatchSize", str(GIANT_DOC_BATCH_ROWS))
         # local-mode fallback only (spark-submit confs win when set):
         # the default 1g driver heap cannot run a giant-document corpus
         # — the 16 GB/600k checkpoint run OOMs on it (SCALE.md §13)

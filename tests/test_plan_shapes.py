@@ -125,6 +125,21 @@ class TestNativeStages:
         assert plan.count("MapInArrow") == 1, plan
         assert "MapInPandas" not in plan, plan
 
+    def test_only_batch_input_is_repartitioned(self, spark, tmp_path):
+        """extract_documents salts and repartitions a batch DataFrame, and
+        keeps a streaming micro-batch's partitioning."""
+        from go_readability_spark.operators.extract import extract_documents
+        from go_readability_spark.schemas import DOCUMENTS_SCHEMA
+
+        batch = spark.createDataFrame([], DOCUMENTS_SCHEMA)
+        stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(str(tmp_path))
+
+        def analyzed(df) -> str:
+            return df._jdf.queryExecution().analyzed().toString()
+
+        assert "RepartitionByExpression" in analyzed(extract_documents(batch))
+        assert "RepartitionByExpression" not in analyzed(extract_documents(stream))
+
     def test_dedup_exact_partial_aggregation(self, spark):
         from go_readability_spark.operators.dedup import dedup_exact
 

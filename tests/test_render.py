@@ -116,8 +116,8 @@ class TestRenderSpark:
         pipeline, in one UDF."""
         from go_readability_spark.operators.extract import extract_documents
         from go_readability_spark.operators.render import extract_and_render
-        from go_readability_spark.readability.extract import ReadabilityOptions
-        from go_readability_spark.readability.instrumented import (
+        from go_readability_spark.readability import (
+            ReadabilityOptions,
             extract_with_metrics,
         )
         from go_readability_spark.sources.tables import corpus_df

@@ -16,8 +16,11 @@ from go_readability_spark.corpus import (
     generate_corpus,
     generate_doc,
 )
-from go_readability_spark.readability import ReadabilityOptions, extract
-from go_readability_spark.readability.instrumented import extract_with_metrics
+from go_readability_spark.readability import (
+    ReadabilityOptions,
+    extract,
+    extract_with_metrics,
+)
 from go_readability_spark.readability.parser import parse_html
 from go_readability_spark.spans import (
     element_to_spans,

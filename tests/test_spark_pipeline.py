@@ -33,8 +33,8 @@ from go_readability_spark.plans.skew import (  # noqa: E402
     with_doc_bytes,
     with_size_bucket,
 )
-from go_readability_spark.readability.extract import ReadabilityOptions  # noqa: E402
-from go_readability_spark.readability.instrumented import (  # noqa: E402
+from go_readability_spark.readability import (  # noqa: E402
+    ReadabilityOptions,
     extract_with_metrics,
 )
 from go_readability_spark.sources.tables import (  # noqa: E402
@@ -154,6 +154,73 @@ class TestErrorRows:
             assert out.column("error").to_pylist() == ["null spans"]
             assert out.column("spans_out").to_pylist() == [[]]
         assert out.column("markdown").to_pylist() == [""]
+
+    def test_render_failure_after_encode_empties_the_row(self, monkeypatch):
+        """An exception after the spans were encoded (here in
+        render_article) yields a whole error row: no partial spans_out,
+        meta or metrics next to the error."""
+        from go_readability_spark.operators import render
+        from go_readability_spark.readability import ExtractionMetrics
+
+        spans = generate_doc("fixture-001")
+        args = (["fixture-001"], [spans], [_ref_doc_bytes(spans)])
+        ok = extract_batch_rows(*args, render=True)[0]
+        assert ok["error"] is None and ok["spans_out"] and ok["markdown"]
+
+        def boom(article):
+            raise RuntimeError("render failed")
+
+        monkeypatch.setattr(render, "render_article", boom)
+        row = extract_batch_rows(*args, render=True)[0]
+        assert row["error"] == "RuntimeError: render failed"
+        assert row["spans_out"] == []
+        assert row["meta"] == {
+            "title": "", "byline": "", "page_type": "error", "node_count": 0
+        }
+        assert row["metrics"] == vars(ExtractionMetrics())
+        assert all(row[c] == "" for c in ("html", "markdown", "text", "metadata_json"))
+
+
+class TestRecordShape:
+    """The per-document record has one definition: ExtractionMetrics
+    matches METRICS_TYPE, and every row of the in-process reference has
+    exactly the output schema's keys (pa.RecordBatch.from_pylist would
+    drop extra keys and null-fill missing ones without a word)."""
+
+    def test_metrics_dataclass_matches_spark_type(self):
+        from dataclasses import fields
+
+        from go_readability_spark.readability import ExtractionMetrics
+        from go_readability_spark.schemas import METRICS_TYPE
+
+        assert [f.name for f in fields(ExtractionMetrics)] == METRICS_TYPE.names
+
+    @pytest.mark.parametrize("render", [False, True])
+    def test_row_keys_match_schema(self, render):
+        from go_readability_spark.schemas import (
+            EXTRACTED_AND_RENDERED_SCHEMA,
+            EXTRACTED_SCHEMA,
+            META_TYPE,
+            METRICS_TYPE,
+        )
+
+        spans = generate_doc("fixture-001")
+        size = _ref_doc_bytes(spans)
+        rows = extract_batch_rows(
+            ["ok", "over-cap", "null-spans"],
+            [spans, spans, None],
+            [size, size + 1, 0],
+            max_doc_bytes=size,
+            render=render,
+        )
+        assert [r["error"] for r in rows] == [
+            None, f"doc_bytes {size + 1} > cap {size}", "null spans"
+        ]
+        schema = EXTRACTED_AND_RENDERED_SCHEMA if render else EXTRACTED_SCHEMA
+        for row in rows:
+            assert set(row) == set(schema.names), row["doc_id"]
+            assert set(row["meta"]) == set(META_TYPE.names), row["doc_id"]
+            assert set(row["metrics"]) == set(METRICS_TYPE.names), row["doc_id"]
 
 
 class TestSkewPlan:
