@@ -58,21 +58,6 @@ def md5_prefix_hash_sql(expr: str) -> str:
     )
 
 
-def minhash_signature_from_hashes(hashes_col: Column, k: int) -> Column:
-    """Signature from a precomputed base-hash array (callers materialize
-    the hashes as a column so the k permutations don't recompute md5)."""
-    assert k <= len(MINHASH_A)
-
-    def perm(a: int, b: int):
-        return lambda h: (a * h + b) % HASH_P
-
-    sig = [
-        F.array_min(F.transform(hashes_col, perm(MINHASH_A[i], MINHASH_B[i])))
-        for i in range(k)
-    ]
-    return F.array(*sig)
-
-
 def minhash_signature_sql(shingles_expr: str, k: int) -> str:
     assert k <= len(MINHASH_A)
     h = md5_prefix_hash_sql("s")

@@ -32,7 +32,7 @@ from .dom import (
     is_probably_visible,
 )
 from .fmt import count_nodes
-from .metadata import get_article_byline, get_article_title
+from .metadata import get_article_title_and_byline
 from .parser import parse_html
 from .preprocess import preprocess_document
 from .regexps import DEFAULT_CHAR_THRESHOLD, DEFAULT_N_TOP_CANDIDATES, byte_len
@@ -166,8 +166,7 @@ def extract_with_metrics(
         options = ReadabilityOptions(forced_page_type=PAGE_TYPE_ARTICLE)
     doc = parse_html(html, "")
     nodes_before = count_nodes(doc.document_element)
-    preprocess_document(doc)
-    pruned = max(0, nodes_before - count_nodes(doc.document_element))
+    pruned = preprocess_document(doc)
     article, metrics = _extract_content_core(doc, options)
     metrics.pruned_nodes = pruned
     metrics.prune_ratio = pruned / nodes_before if nodes_before > 0 else 0.0
@@ -236,8 +235,7 @@ def _extract_content_core(
                     doc, candidates, char_threshold, ""
                 )
 
-        title = get_article_title(doc)
-        byline = get_article_byline(doc)
+        title, byline = get_article_title_and_byline(doc)
 
         header: Optional[VElement] = None
         footer: Optional[VElement] = None

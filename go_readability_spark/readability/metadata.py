@@ -16,7 +16,11 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass
 
-from .dom import get_elements_by_tag_name, get_inner_text
+from .dom import (
+    get_elements_by_tag_name,
+    get_elements_grouped_by_tag,
+    get_inner_text,
+)
 from .regexps import (
     CDATA_STRIP,
     HTML_ENTITY,
@@ -31,12 +35,13 @@ from .regexps import (
     TITLE_SEPARATOR_STRIP,
     byte_len,
 )
-from .vdom import VDocument
+from .vdom import VDocument, VElement
 
 __all__ = [
     "ReadabilityMetadata",
     "get_article_title",
     "get_article_byline",
+    "get_article_title_and_byline",
     "get_jsonld",
     "unescape_html_entities",
     "is_url",
@@ -68,10 +73,29 @@ def _word_count(s: str) -> int:
     return len(s.split())
 
 
+# every element the title and byline read, gathered in one walk
+_METADATA_TAGS = ("title", "h1", "h2", "meta", "script")
+
+
+def _metadata_elements(doc: VDocument) -> dict[str, list[VElement]]:
+    return get_elements_grouped_by_tag(doc.document_element, _METADATA_TAGS)
+
+
+def get_article_title_and_byline(doc: VDocument) -> tuple[str, str]:
+    """``(get_article_title(doc), get_article_byline(doc))`` from one
+    walk of the document."""
+    elements = _metadata_elements(doc)
+    return _article_title(elements), _article_byline(elements)
+
+
 def get_article_title(doc: VDocument) -> str:
     """Title extraction with separator handling (metadata.go:65-163)."""
+    return _article_title(_metadata_elements(doc))
+
+
+def _article_title(elements: dict[str, list[VElement]]) -> str:
     orig_title = ""
-    title_elements = get_elements_by_tag_name(doc.document_element, "title")
+    title_elements = elements["title"]
     if title_elements:
         orig_title = get_inner_text(title_elements[0], False)
     cur_title = orig_title
@@ -90,9 +114,7 @@ def get_article_title(doc: VDocument) -> str:
             if len(parts) > 1:
                 cur_title = " ".join(parts[1:])
     elif ": " in cur_title:
-        headings = get_elements_by_tag_name(
-            doc.document_element, "h1"
-        ) + get_elements_by_tag_name(doc.document_element, "h2")
+        headings = elements["h1"] + elements["h2"]
         trimmed_title = cur_title.strip()
         match = any(
             get_inner_text(h, False).strip() == trimmed_title for h in headings
@@ -108,7 +130,7 @@ def get_article_title(doc: VDocument) -> str:
                         if _word_count(orig_title[:first_colon]) > 5:
                             cur_title = orig_title
     elif byte_len(cur_title) > 150 or byte_len(cur_title) < 15:
-        h_ones = get_elements_by_tag_name(doc.document_element, "h1")
+        h_ones = elements["h1"]
         if len(h_ones) == 1:
             cur_title = get_inner_text(h_ones[0], False)
 
@@ -133,12 +155,16 @@ def get_article_title(doc: VDocument) -> str:
 
 def get_article_byline(doc: VDocument) -> str:
     """Byline from JSON-LD, then meta tags (metadata.go:174-240)."""
-    jsonld = get_jsonld(doc)
+    return _article_byline(_metadata_elements(doc))
+
+
+def _article_byline(elements: dict[str, list[VElement]]) -> str:
+    jsonld = _jsonld(elements["script"])
     if jsonld.byline != "":
         return jsonld.byline
 
     values: dict[str, str] = {}
-    for element in get_elements_by_tag_name(doc.document_element, "meta"):
+    for element in elements["meta"]:
         element_name = element.get_attribute("name")
         element_property = element.get_attribute("property")
         content = element.get_attribute("content")
@@ -173,8 +199,12 @@ def get_article_byline(doc: VDocument) -> str:
 def get_jsonld(doc: VDocument) -> ReadabilityMetadata:
     """Schema.org Article metadata from ld+json scripts
     (metadata.go:251-373)."""
+    return _jsonld(get_elements_by_tag_name(doc.document_element, "script"))
+
+
+def _jsonld(scripts: list[VElement]) -> ReadabilityMetadata:
     metadata = ReadabilityMetadata()
-    for element in get_elements_by_tag_name(doc.document_element, "script"):
+    for element in scripts:
         if element.get_attribute("type") != "application/ld+json":
             continue
         content = CDATA_STRIP.sub("", get_inner_text(element, False))

@@ -47,7 +47,13 @@ standalone table parts inside a template are dropped by the stray-
 structure rule instead of being collected), and SVG/MathML namespaces
 (foreign tags parse lowercased as plain elements — matching the
 reference VDOM's lowercasing — with the self-closing flag and HTML
-integration points honored).
+integration points honored). Two integration-point approximations
+follow from having no namespaces: ``annotation-xml`` is an HTML
+integration point whatever its ``encoding`` attribute (the spec and
+x/net/html require ``text/html`` or ``application/xhtml+xml``), and
+``title`` is one without checking for an svg ancestor. Rare MathML/SVG
+soup can therefore honor or ignore a self-closing flag differently
+from the reference tree.
 """
 
 from __future__ import annotations

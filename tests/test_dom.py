@@ -11,7 +11,14 @@ from go_readability_spark.readability import (
     get_text_density,
     has_ancestor_tag,
     is_probably_visible,
+    parse_html,
 )
+from go_readability_spark.readability.dom import (
+    begin_inner_text_cache,
+    end_inner_text_cache,
+    normalized_byte_len,
+)
+from go_readability_spark.readability.regexps import byte_len
 
 
 def el(tag, attrs=None, children=()):
@@ -195,3 +202,138 @@ def test_get_text_density():
     d2 = el("div")
     d2.append_child(VText("abcd"))
     assert get_text_density(d2) == 4.0
+
+
+# -- density measures vs. the formulas they replaced -------------------------
+#
+# get_link_density/get_text_density now measure the normalized text's
+# byte length without building it and memoize per element. The helpers
+# below are the previous formulas verbatim: byte_len of the rewritten
+# normalized text, and a fresh link walk per call.
+
+
+def _old_link_density(element):
+    text_length = byte_len(get_inner_text(element, True))
+    if text_length == 0:
+        return 0.0
+    link_length = 0
+    for link in get_elements_by_tag_name(element, "a"):
+        href = link.get_attribute("href")
+        coefficient = 0.3 if href.startswith("#") else 1.0
+        link_length += int(byte_len(get_inner_text(link, True)) * coefficient)
+    return link_length / text_length
+
+
+def _old_text_density(element):
+    text_length = byte_len(get_inner_text(element, True))
+    if text_length == 0:
+        return 0.0
+    child_element_count = sum(
+        1 for c in element.children if isinstance(c, VElement)
+    )
+    return text_length / max(child_element_count, 1)
+
+
+def assert_density_parity(root):
+    """Every element's normalized length and densities equal the old
+    formulas, outside and inside the phase cache (twice inside: the
+    second pass in reverse order reads the memo)."""
+    elements = get_elements_by_tag_name(root, "*")
+    want = [(_old_link_density(e), _old_text_density(e)) for e in elements]
+    lengths = [byte_len(get_inner_text(e, True)) for e in elements]
+    assert [normalized_byte_len(get_inner_text(e)) for e in elements] == lengths
+    assert [(get_link_density(e), get_text_density(e)) for e in elements] == want
+    begin_inner_text_cache()
+    try:
+        for order in (elements, elements[::-1]):
+            got = {id(e): (get_link_density(e), get_text_density(e)) for e in order}
+            assert [got[id(e)] for e in elements] == want
+    finally:
+        end_inner_text_cache()
+
+
+# GOWS runs (\r\n included), non-GOWS whitespace that Python's strip()
+# still trims (\v, NBSP), multibyte text and lone surrogates
+_TRICKY_HTML = (
+    "<html><head><title> t </title></head><body>"
+    "<div>\r\n\r\n  café 日本 \v\v x \xa0\xa0 y\t\f z"
+    "<a href='#top'>  back\r\n to   top </a>"
+    "<a href=' #no'>lead space</a><a>no href</a>"
+    "<a href='/x'>outer <a href='#in'>inner \ud800 \udfff</a> tail</a>"
+    "<p>\v para \v</p><p>\xa0\xa0</p><p>\U0001F600  \U0001F600</p>"
+    "<section><a href='#'>#</a>\n\n\n<span> \r \n </span></section>"
+    "</div></body></html>"
+)
+
+
+def test_density_parity_tricky_text():
+    assert_density_parity(parse_html(_TRICKY_HTML).document_element)
+
+
+def test_density_parity_over_fuzz_and_corpus_populations():
+    import random
+
+    from go_readability_spark.corpus import POPULATIONS, generate_doc
+    from go_readability_spark.spans import spans_to_html
+    from tools.parse_fuzz import gen_doc
+
+    rng = random.Random(42)
+    for _ in range(200):
+        assert_density_parity(parse_html(gen_doc(rng)).document_element)
+    for population in POPULATIONS:
+        for i in range(2):
+            html = spans_to_html(generate_doc(f"{population}-{i:06d}"))
+            assert_density_parity(parse_html(html).document_element)
+
+
+def test_normalized_byte_len_counts_runs():
+    assert normalized_byte_len("") == 0
+    assert normalized_byte_len(" ") == 1
+    assert normalized_byte_len("a \t\n\f\r b") == 3  # one run -> one byte
+    assert normalized_byte_len("a\r\nb\r\n\r\nc") == 5
+    assert normalized_byte_len("\v\v \xa0\xa0") == 7  # \v, NBSP are not GOWS
+    assert normalized_byte_len("日  \ud800") == 7  # 3 + 1 + 3 bytes
+
+
+def test_one_extraction_measures_without_rewriting(monkeypatch):
+    """Inside one extraction no density query rewrites text with
+    NORMALIZE, and each element's subtree is walked for links at most
+    once, however often the scorer, the accept gate, the readerable
+    check and the classifier ask for its link density."""
+    import collections
+
+    from go_readability_spark.corpus import generate_doc
+    from go_readability_spark.readability import ReadabilityOptions, dom
+    from go_readability_spark.readability.extract import extract_with_metrics
+    from go_readability_spark.spans import spans_to_html
+
+    class CountingPattern:
+        def __init__(self, pattern):
+            self.pattern = pattern
+            self.subs = 0
+
+        def sub(self, *args, **kwargs):
+            self.subs += 1
+            return self.pattern.sub(*args, **kwargs)
+
+    normalize = CountingPattern(dom.NORMALIZE)
+    monkeypatch.setattr(dom, "NORMALIZE", normalize)
+    link_walks = collections.Counter()
+    walk = dom.get_elements_by_tag_name
+
+    def counting_walk(element, tag_name):
+        if tag_name == "a":
+            link_walks[id(element)] += 1
+        return walk(element, tag_name)
+
+    monkeypatch.setattr(dom, "get_elements_by_tag_name", counting_walk)
+    for doc_id in ("fixture-001", "syn-article-000000", "syn-links-000004",
+                   "syn-index-000001", "syn-structural-000006"):
+        link_walks.clear()
+        extract_with_metrics(
+            spans_to_html(generate_doc(doc_id)),
+            ReadabilityOptions(forced_page_type=""),
+        )
+        assert link_walks, doc_id
+        assert max(link_walks.values()) == 1, doc_id
+    assert normalize.subs == 0

@@ -3,7 +3,10 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from go_readability_spark.readability.markdown import (
     _join_parts,
@@ -11,6 +14,7 @@ from go_readability_spark.readability.markdown import (
     to_markdown,
 )
 from go_readability_spark.readability.parser import parse_html
+from go_readability_spark.readability.regexps import GOWS
 
 
 def md(html: str) -> str:
@@ -239,3 +243,41 @@ def test_markdown_lang_fence():
 
 def test_none_element():
     assert to_markdown(None) == ""
+
+
+# the string-building join that _join_parts replaced, verbatim
+_OLD_WS_END = re.compile(GOWS + r"$")
+_OLD_WS_START = re.compile(r"^" + GOWS)
+_OLD_PUNCT = re.compile(r"[.,!?;:)]")
+
+
+def _old_join_parts(parts):
+    result = ""
+    for part in parts:
+        if part == "" or part.strip() == "":
+            continue
+        if not result:
+            result = part
+            continue
+        if not _OLD_WS_END.search(result) and not _OLD_WS_START.search(part):
+            if not _OLD_PUNCT.match(part[0]):
+                result += " "
+        result += part
+    return result
+
+
+@given(
+    st.lists(
+        st.lists(
+            st.sampled_from(
+                ["a", "Z", "*", ".", ",", "!", "?", ";", ":", ")", "(", " ",
+                 "\t", "\n", "\r", "\f", "\v", "\xa0", "\u2003", "é", "\r\n"]
+            ),
+            max_size=4,
+        ).map("".join),
+        max_size=12,
+    )
+)
+@settings(max_examples=300, deadline=None)
+def test_join_parts_matches_string_building_join(parts):
+    assert _join_parts(parts) == _old_join_parts(parts)

@@ -1,11 +1,14 @@
 """Preprocess tests ported from /root/reference/preprocess_test.go."""
 
+import pytest
+
 from go_readability_spark.readability import (
     get_elements_by_tag_name,
     is_likely_ad,
     parse_html,
     preprocess_document,
 )
+from go_readability_spark.readability.fmt import count_nodes
 from go_readability_spark.readability.vdom import VElement
 
 
@@ -100,3 +103,77 @@ def test_nested_removal_is_safe():
     preprocess_document(d)
     assert get_elements_by_tag_name(d.body, "nav") == []
     assert len(get_elements_by_tag_name(d.body, "p")) == 1
+
+
+def _two_walk_pruned(html):
+    """The previous prune count: nodes before preprocessing less nodes
+    after."""
+    d = parse_html(html)
+    before = count_nodes(d.document_element)
+    preprocess_document(d)
+    return before, before - count_nodes(d.document_element)
+
+
+@pytest.mark.parametrize(
+    "html, pruned, nodes",
+    [
+        # unwanted tag inside an unwanted tag: nav, script, its text
+        ("<nav><script>x()</script></nav><p>keep</p>", 3, 8),
+        # ad inside an ad: div, div, p, text
+        ("<div class='ad-box'><div id='sponsor-1'><p>buy</p></div></div>"
+         "<p>keep</p>", 4, 9),
+        # ad and unwanted tag inside an unwanted tag: the ad pass never
+        # sees them
+        ("<aside><div class='ad-x'>a</div><nav>n</nav></aside><p>keep</p>",
+         5, 10),
+        # unwanted tags nested three deep, then data-ad/role ads nested
+        ("<form><button><script>s</script></button></form>"
+         "<div data-ad>x<div role=advertisement>y</div></div>", 8, 11),
+        # body itself is an ad: the whole body leaves the document
+        ("<html><body class='ad-wrapper'><div class='promo'>x</div>"
+         "<p>text</p></body></html>", 5, 7),
+    ],
+)
+def test_pruned_nodes_count_each_detached_subtree_once(html, pruned, nodes):
+    """preprocess_document counts the nodes it detached from the
+    document, once per outermost removed subtree; nested matches it
+    also detaches (from parents already detached) add nothing. The
+    count equals the two-walk difference, and extract_with_metrics
+    reports it."""
+    from go_readability_spark.readability import extract_with_metrics
+
+    assert _two_walk_pruned(html) == (nodes, pruned)
+    assert preprocess_document(parse_html(html)) == pruned
+    _, metrics = extract_with_metrics(html)
+    assert metrics.pruned_nodes == pruned
+    assert metrics.prune_ratio == pruned / nodes
+
+
+def test_nested_ad_is_removed_from_a_removed_body():
+    """doc.body stays readable after the ad pass detaches it, so the
+    nested ads inside it are still removed, as in the reference."""
+    d = parse_html(
+        "<html><body class='ad-wrapper'><div class='promo'>x</div>"
+        "<p>text</p></body></html>"
+    )
+    preprocess_document(d)
+    assert d.body not in d.document_element.children
+    assert [c.tag_name for c in d.body.children] == ["p"]
+
+
+def test_pruned_count_matches_two_walks_over_populations():
+    import random
+
+    from go_readability_spark.corpus import POPULATIONS, generate_doc
+    from go_readability_spark.spans import spans_to_html
+    from tools.parse_fuzz import gen_doc
+
+    rng = random.Random(7)
+    docs = [gen_doc(rng) for _ in range(300)]
+    docs += [
+        spans_to_html(generate_doc(f"{population}-{i:06d}"))
+        for population in POPULATIONS
+        for i in range(3)
+    ]
+    for html in docs:
+        assert preprocess_document(parse_html(html)) == _two_walk_pruned(html)[1]

@@ -211,3 +211,42 @@ class TestWalkerEquivalence:
             want.extend(naive(root, {t}))
         got = get_elements_in_tag_order(root, tag_list)
         assert [id(e) for e in got] == [id(e) for e in want]
+
+
+class TestDensityParity:
+    """Normalized lengths and densities equal the formulas they
+    replaced on arbitrary trees: GOWS runs (``\\r\\n`` too), whitespace
+    that strip() trims but NORMALIZE keeps (``\\v``, NBSP), multibyte
+    text, lone surrogates, nested ``<a>`` and ``href="#..."``."""
+
+    text = st.lists(
+        st.sampled_from(
+            ["a", "z", ",", " ", "\t", "\n", "\r\n", "\f", "\r", "\v",
+             "\xa0", "é", "日", "\U0001F600", "\ud800", "\udfff", "#"]
+        ),
+        max_size=10,
+    ).map("".join)
+    hrefs = st.sampled_from([None, "", "#", "#frag", " #x", "/page", "http://x"])
+
+    @st.composite
+    def trees(draw, depth=3):  # noqa: N805 — hypothesis composite style
+        from go_readability_spark.readability import VElement, VText
+
+        cls = TestDensityParity
+        el = VElement(draw(st.sampled_from(["div", "p", "a", "span", "section"])))
+        href = draw(cls.hrefs)
+        if href is not None:
+            el.set_attribute("href", href)
+        for _ in range(draw(st.integers(0, 4))):
+            if depth > 0 and draw(st.booleans()):
+                el.append_child(draw(cls.trees(depth=depth - 1)))
+            else:
+                el.append_child(VText(draw(cls.text)))
+        return el
+
+    @given(trees())
+    @settings(max_examples=150, deadline=None)
+    def test_matches_old_formulas(self, root):
+        from tests.test_dom import assert_density_parity
+
+        assert_density_parity(root)
